@@ -9,7 +9,7 @@ page request (doc/source/includes/es_queries/LandingPageQueryRequest
 711-721 aggType dispatch, 282/707 date-range parsing) — through the
 REAL dispatcher `run_metrics_request`, end to end against the DuckDB
 oracle: identifier-family expansion -> COUNTER filter -> date scope ->
-bucketed agg with exact uniques -> citation theta-join -> full-outer
+bucketed agg with exact uniques -> citation substring match -> full-outer
 merge -> end-exclusive spine zero-fill.
 
 The request values are mapped onto the synthetic pid universe: the
@@ -795,7 +795,7 @@ def q_metrics_request_catalog_summary(
 # Per-seed family blocks: pid7 -> 0, pid23 -> 2, sid4 -> 4; every
 # seed additionally maps to itself (family_map's catalogPIDs[i]=[i]
 # initialization), which matters only on the citation side (no event
-# pid equals a bare seed string, but the substring theta-join sees it).
+# pid equals a bare seed string, but the citation substring match sees it).
 ORACLE_CATALOG_SUMMARY_REQUEST = f"""
 WITH {_REQUEST_CTES},
 sseeds (seed, blk) AS (VALUES ('pid7', 0), ('pid23', 2), ('sid4', 4)),

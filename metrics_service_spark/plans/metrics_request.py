@@ -7,11 +7,23 @@ COUNTER-filtered composite aggregation in ES, merges Postgres citation
 counts, and pivots into parallel arrays with a zero-filled month spine
 (metricsreader.py:1569-1816).
 
-Here the whole lifecycle is ONE lazy DataFrame program:
-  identifier expansion (broadcast semi-join) -> COUNTER filter ->
-  groupBy(date_trunc, dims) with exact distinct -> full-outer merge with
-  the citations aggregate -> date-spine zero-fill.
-Process boundaries (HTTP->Solr->ES->Postgres) become Spark stages.
+A request runs in the reference's order.  It resolves the identifier
+family first (`family_pids` / `family_map`: one Spark job, no shuffle)
+and collects it to the driver, as the reference sends the resolved PID
+list from Solr to ES as a terms filter (pid_resolution.py:285-416,
+metricsreader.py:1259-1343).  The list becomes literal predicates:
+`pid IN (...)` on the events, one `exists(norms, p -> instr(p,
+lower(target_id)) > 0)` on the citations.  Then come the COUNTER filter,
+the groupBy(date bucket, dims) with exact distinct and the citation
+count; their merge, the date-spine zero-fill and the sort run in one
+partition, since the result has at most buckets x countries rows.
+Under AQE each exchange is a Spark job, so a request runs the family
+job, two exchanges per aggregate side and the final stage.
+
+Expressions are SQL strings: each Column-API call is a py4j round trip
+(about 0.3 ms with the call-site capture), and building a request from
+Column calls took about 0.3 s of Python, against 0.1 s now (api_mix
+requests, 4-core host).
 
 Known deviations from the reference, implemented intentionally
 (SURVEY.md §7.4 "reference bugs to not replicate silently"):
@@ -42,6 +54,7 @@ EXCLUDED_TAGS = (
 
 AGG_FORMATS = {"month": "yyyy-MM", "day": "yyyy-MM-dd", "year": "yyyy"}
 CITATION_KEY_LEN = {"month": 7, "day": 10, "year": 4}
+METRIC_COLS = ["downloads", "views", "unique_downloads", "unique_views", "citations"]
 
 
 @dataclass
@@ -55,6 +68,102 @@ class MetricsTables:
 
 def _parse_request_date(s: str) -> datetime:
     return datetime.strptime(s, "%m/%d/%Y")  # metricsreader.py:278-298
+
+
+def _sql_string(s: str) -> str:
+    """`s` as a Spark SQL string literal (backslash escapes, the
+    parser's default).  The lexer ends the literal at its closing quote
+    under any parser setting, so no request value can change the
+    expression around it; under the legacy
+    spark.sql.parser.escapedStringLiterals=true a value with a quote or
+    a backslash keeps its escapes and matches nothing."""
+    if not isinstance(s, str):
+        raise TypeError(f"request values must be strings, got {s!r}")
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_array(values) -> str:
+    """A string list as ONE SQL array literal."""
+    return f"cast(array({', '.join(map(_sql_string, values))}) as array<string>)"
+
+
+def _sql_in(col: str, values) -> str:
+    """`col IN (values)`; an empty list matches nothing."""
+    return f"{col} IN ({', '.join(map(_sql_string, values))})" if values else "false"
+
+
+# the robot/machine exclusion + read/format/session predicates applied
+# to every aggregation (metricselasticsearch.py:232-265)
+COUNTER_FILTER = (
+    "event = 'read' AND formatType IN ('METADATA', 'DATA')"
+    " AND sessionId IS NOT NULL AND sessionId != -1"
+    f" AND (tags IS NULL OR NOT arrays_overlap(tags, {_sql_array(EXCLUDED_TAGS)}))"
+)
+# an identifier row's family: its PID and every datasetIdentifierFamily
+# member, one row each
+MEMBERS = (
+    "explode(concat(array(PID),"
+    " coalesce(datasetIdentifierFamily, cast(array() as array<string>))))"
+)
+# the citation side's pid: Dryad '?'-suffix stripped, lowercased
+# (gatherCitations, metricsreader.py:423-468)
+NORM_PID = "lower(substring_index(pid, '?', 1))"
+
+
+def _cites_any(norms: str) -> str:
+    """gatherCitations' test: lower(target_id) is a substring of some
+    normalized family pid (`norms`, an array expression)."""
+    return f"exists({norms}, p -> instr(p, lower(target_id)) > 0)"
+
+
+def spine_buckets(start: datetime, end: datetime, agg_type: str) -> str:
+    """The bucket keys of [start, end) as one array expression, in
+    order.  The reference builds the spine with `range((end -
+    start).days)` over day offsets and dedupes the formatted keys
+    (metricsreader.py:1029-1033) — the END DAY IS EXCLUSIVE, so a range
+    ending on the 1st of a month contributes no bucket for that
+    month/day."""
+    first, last = (f"DATE'{d:%Y-%m-%d}'" for d in (start, end))
+    days = f"filter(sequence({first}, {last}, INTERVAL 1 DAY), d -> d < {last})"
+    return f"array_distinct(transform({days}, d -> date_format(d, '{AGG_FORMATS[agg_type]}')))"
+
+
+def _zero_fill(merged: DataFrame, buckets: str, by_country: bool) -> DataFrame:
+    """`spine (x the observed countries) FULL OUTER JOIN merged` on the
+    bucket keys, for a `merged` held in ONE partition: a global
+    aggregate gathers its rows and its countries, the spine rows are
+    appended to them, and a grouped max joins each spine row to its
+    merged row.  In one partition neither step needs an exchange."""
+    no_counts = ", ".join(f"CAST(NULL AS BIGINT) AS {m}" for m in METRIC_COLS)
+    rows = "collect_list(struct(*, false AS __spine)) AS __rows"
+    if by_country:
+        gathered = merged.selectExpr(
+            rows,
+            # the countries of the event aggregate: a citation-only row
+            # has NULL country and NULL counts, an event row non-NULL
+            # counts
+            "collect_set(country) AS __countries",
+            "max(country IS NULL AND downloads IS NOT NULL) AS __null_country",
+        )
+        countries = (
+            "IF(__null_country, concat(__countries, array(CAST(NULL AS STRING))), __countries)"
+        )
+        spine = (
+            f"flatten(transform({buckets}, b -> transform({countries},"
+            f" c -> struct(b AS bucket, c AS country, {no_counts}, true AS __spine))))"
+        )
+        # an equality join never matches a NULL country, so a spine row
+        # with NULL country stays apart from the merged row
+        keys = ["bucket", "country", F.expr("IF(country IS NULL, __spine, NULL)")]
+    else:
+        gathered = merged.selectExpr(rows)
+        spine = f"transform({buckets}, b -> struct(b AS bucket, {no_counts}, true AS __spine))"
+        keys = ["bucket"]
+    return (
+        gathered.selectExpr(f"inline(concat(__rows, {spine}))")
+        .groupBy(*keys)
+        .agg(*[F.max(m).alias(m) for m in METRIC_COLS])
+    )
 
 
 def run_metrics_request(
@@ -81,26 +190,24 @@ class MetricsRequestPlanner:
     def family_pids(self, filter_type: str, values: list[str]) -> DataFrame:
         """Expand the request's target ids into the full PID set, one
         column `pid` (reference: getResolvePIDs / identifiers-2 lookups,
-        pid_resolution.py:285-416, metricsreader.py:1259-1343)."""
-        ids = self.t.identifiers
-        vals = [F.lit(v) for v in values]
+        pid_resolution.py:285-416, metricsreader.py:1259-1343).  The
+        matched identifier rows are few, so they are deduplicated in one
+        partition: collecting the family is one Spark job, no shuffle."""
         if filter_type in ("dataset", "catalog", "package"):
-            matched = ids.filter(
-                F.col("PID").isin(values)
-                | F.col("SID").isin(values)
-                | F.arrays_overlap("datasetIdentifierFamily", F.array(*vals))
+            match = (
+                f"{_sql_in('PID', values)} OR {_sql_in('SID', values)}"
+                f" OR arrays_overlap(datasetIdentifierFamily, {_sql_array(values)})"
             )
         elif filter_type in ("user", "group"):
             # user/group queries require public datasets
             # (metricsreader.py:1305-1323)
-            matched = ids.filter(
-                F.arrays_overlap("userID", F.array(*vals)) & F.col("isPublic")
-            )
+            match = f"arrays_overlap(userID, {_sql_array(values)}) AND isPublic"
         else:
             raise ValueError(f"family_pids does not apply to {filter_type!r}")
         return (
-            matched.select(F.explode("datasetIdentifierFamily").alias("pid"))
-            .union(matched.select(F.col("PID").alias("pid")))
+            self.t.identifiers.filter(match)
+            .selectExpr(f"{MEMBERS} AS pid")
+            .coalesce(1)
             .distinct()
         )
 
@@ -110,47 +217,65 @@ class MetricsRequestPlanner:
         analog of family_pids (reference: getResolvePIDs keyed by the
         requested pid, pid_resolution.py:285-416; catalogPIDs dict in
         metricsreader.py:480-508).  Every seed maps at least to itself
-        (the reference initializes catalogPIDs[i] = [i])."""
-        ids = self.t.identifiers
-        seeds = self.spark.createDataFrame([(v,) for v in values], "seed string")
-        matched = ids.join(
-            F.broadcast(seeds),
-            (F.col("PID") == F.col("seed"))
-            | (F.col("SID") == F.col("seed"))
-            | F.array_contains("datasetIdentifierFamily", F.col("seed")),
+        (the reference initializes catalogPIDs[i] = [i]).  The seeds
+        are a literal array tested on each identifier row, so there is
+        no join; deduplicated in one partition, like family_pids."""
+        seeds = _sql_array(values)
+        matched = self.t.identifiers.selectExpr(
+            "*",
+            f"explode(filter({seeds}, s -> PID = s OR SID = s"
+            " OR array_contains(datasetIdentifierFamily, s))) AS seed",
         )
-        members = matched.select(
-            "seed", F.explode("datasetIdentifierFamily").alias("pid")
-        ).union(matched.select("seed", F.col("PID").alias("pid")))
-        return members.union(
-            seeds.select("seed", F.col("seed").alias("pid"))
-        ).distinct()
+        itself = self.spark.range(1).selectExpr(f"explode({seeds}) AS seed")
+        return (
+            matched.selectExpr("seed", f"{MEMBERS} AS pid")
+            .union(itself.selectExpr("seed", "seed AS pid"))
+            .coalesce(1)
+            .distinct()
+        )
+
+    def _resolve_family(
+        self, filter_type: str, values: list[str]
+    ) -> tuple[list[str], list[str]]:
+        """`family_pids` collected to the driver: (pids, normalized
+        pids), each sorted and free of NULL — a NULL member matches no
+        event and no citation."""
+        rows = self.family_pids(filter_type, values).selectExpr(
+            "pid", f"{NORM_PID} AS norm"
+        ).collect()
+        return (
+            sorted({r.pid for r in rows if r.pid is not None}),
+            sorted({r.norm for r in rows if r.norm is not None}),
+        )
+
+    def _resolve_family_map(
+        self, filter_type: str, values: list[str]
+    ) -> dict[str, tuple[list[str], list[str]]]:
+        """`family_map` collected to the driver: seed -> (pids,
+        normalized pids), like `_resolve_family` per seed."""
+        rows = self.family_map(filter_type, values).selectExpr(
+            "seed", "pid", f"{NORM_PID} AS norm"
+        ).collect()
+        fams: dict[str, tuple[set, set]] = {}
+        for r in rows:
+            pids, norms = fams.setdefault(r.seed, (set(), set()))
+            if r.pid is not None:
+                pids.add(r.pid)
+                norms.add(r.norm)
+        return {s: (sorted(p), sorted(n)) for s, (p, n) in fams.items()}
 
     # -- event-side filtering --------------------------------------------
     def counter_filtered_events(self) -> DataFrame:
-        """The robot/machine exclusion + read/format/session predicates
-        applied to every aggregation (metricselasticsearch.py:232-265)."""
-        ev = self.t.events
-        return ev.filter(
-            (F.col("event") == "read")
-            & F.col("formatType").isin("METADATA", "DATA")
-            & F.col("sessionId").isNotNull()
-            & (F.col("sessionId") != -1)
-            & (
-                F.col("tags").isNull()
-                | ~F.arrays_overlap(
-                    "tags", F.array(*[F.lit(t) for t in EXCLUDED_TAGS])
-                )
-            )
-        )
+        """The events every aggregation reads (COUNTER_FILTER)."""
+        return self.t.events.filter(COUNTER_FILTER)
 
-    def scoped_events(self, request: dict) -> tuple[DataFrame, DataFrame | None, dict]:
+    def scoped_events(self, request: dict) -> tuple[DataFrame, list[str] | None, dict]:
         """Apply the filterBy clauses: target scope (dataset/repository/
         user/group/portal), plus the date-range filter.  Returns
-        (events, family_or_None, meta)."""
+        (events, normalized family pids or None, meta)."""
         filters = request.get("filterBy", [])
         ev = self.counter_filtered_events()
-        family = None
+        norms = None
         meta: dict = {"filterType": None, "start": None, "end": None}
         for f in filters:
             ftype, values = f["filterType"], list(f["values"])
@@ -166,8 +291,8 @@ class MetricsRequestPlanner:
                 # reference bounds: strict gt on the start instant, lte
                 # on the end instant (metricselasticsearch.py:259-264)
                 ev = ev.filter(
-                    (F.col("dateLogged") > F.lit(start.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp"))
-                    & (F.col("dateLogged") <= F.lit(end.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp"))
+                    f"dateLogged > CAST('{start:%Y-%m-%d %H:%M:%S}' AS TIMESTAMP)"
+                    f" AND dateLogged <= CAST('{end:%Y-%m-%d %H:%M:%S}' AS TIMESTAMP)"
                 )
             elif ftype not in (
                 "dataset",
@@ -190,132 +315,86 @@ class MetricsRequestPlanner:
                 # — falls through every branch and yields an empty
                 # result.  Mirror that: the scope matches nothing.
                 meta["filterType"] = ftype
-                ev = ev.filter(F.lit(False))
+                ev = ev.filter("false")
             elif ftype in ("dataset", "catalog", "package", "user", "group"):
                 meta["filterType"] = ftype
-                # r18 (guide §2.4, the catalog_summary pattern): the
-                # family feeds TWO broadcast builds — the event semi-
-                # join here and citations_for_family's normalized-pid
-                # side — so derive it once behind a lazy checkpoint
-                family = self.family_pids(ftype, values).localCheckpoint(
-                    eager=False
-                )
-                ev = ev.join(F.broadcast(family), "pid", "left_semi")
+                pids, norms = self._resolve_family(ftype, values)
+                ev = ev.filter(_sql_in("pid", pids))
             elif ftype == "repository":
                 meta["filterType"] = ftype
-                ev = ev.filter(F.col("nodeId").isin(values))
+                ev = ev.filter(_sql_in("nodeId", values))
             elif ftype == "portal":
                 meta["filterType"] = ftype
-                ev = ev.filter(
-                    F.arrays_overlap(
-                        "portalIdentifier", F.array(*[F.lit(v) for v in values])
-                    )
-                )
-        return ev, family, meta
+                ev = ev.filter(f"arrays_overlap(portalIdentifier, {_sql_array(values)})")
+        return ev, norms, meta
 
     # -- citations (process boundary #3 in the reference) -----------------
-    def citations_for_family(self, family: DataFrame | None) -> DataFrame:
+    def citations_for_family(self, norms: list[str] | None) -> DataFrame:
         """gatherCitations (metricsreader.py:423-468): target_id matched
         as lowercase substring of a family pid, Dryad '?'-suffix
-        stripped from the pid before comparison.  Kept as a broadcast
-        theta-join for fidelity; each citation counted once
-        (reference breaks after first matching pid)."""
+        stripped from the pid before comparison (`norms`, from
+        `_resolve_family`).  One filter tests every pid of a citation,
+        so each citation is counted once (the reference breaks after
+        the first matching pid)."""
         cites = self.t.citations
-        if family is None:
+        if norms is None:
             return cites
-        pids = family.select(
-            F.lower(F.substring_index(F.col("pid"), "?", 1)).alias("__pid_norm")
-        ).distinct()
-        matched = cites.join(
-            F.broadcast(pids),
-            F.instr(F.col("__pid_norm"), F.lower(F.col("target_id"))) > 0,
-            "inner",
-        )
+        matched = cites.filter(_cites_any(_sql_array(norms)) if norms else "false")
         return matched.dropDuplicates(["target_id", "source_id"])
 
     # -- the aggregation + merge ------------------------------------------
     def plan(self, request: dict) -> DataFrame:
         """Build the full result DataFrame: one row per spine bucket
         (x country when grouped), with total/unique downloads & views
-        and citation counts, zero-filled."""
+        and citation counts, zero-filled, sorted by the bucket keys."""
         group_by = list(request.get("groupBy", ["month"]))
         agg_type = next(
             (g for g in group_by if g in AGG_FORMATS), "month"
         )  # aggType selection metricsreader.py:711-721
         by_country = "country" in group_by
-        fmt = AGG_FORMATS[agg_type]
+        keys = ["bucket"] + (["country"] if by_country else [])
 
-        ev, family, meta = self.scoped_events(request)
-        bucket = F.date_format("dateLogged", fmt).alias("bucket")
-        dims = [bucket] + ([F.col("geoip.country_code2").alias("country")] if by_country else [])
-
-        uniq = (
-            F.approx_count_distinct if self.approx else F.countDistinct
-        )
-        is_data = F.col("formatType") == "DATA"
-        is_meta = F.col("formatType") == "METADATA"
-        agg = ev.groupBy(*dims).agg(
-            F.count(F.when(is_data, 1)).alias("downloads"),
-            F.count(F.when(is_meta, 1)).alias("views"),
-            uniq(F.when(is_data, F.col("eventId"))).alias("unique_downloads"),
-            uniq(F.when(is_meta, F.col("eventId"))).alias("unique_views"),
+        ev, norms, meta = self.scoped_events(request)
+        dims = [f"date_format(dateLogged, '{AGG_FORMATS[agg_type]}') AS bucket"]
+        if by_country:
+            dims.append("geoip.country_code2 AS country")
+        uniq = "approx_count_distinct({})" if self.approx else "count(DISTINCT {})"
+        data_id = "CASE WHEN formatType = 'DATA' THEN eventId END"
+        meta_id = "CASE WHEN formatType = 'METADATA' THEN eventId END"
+        agg = ev.groupBy(*map(F.expr, dims)).agg(
+            F.expr("count(CASE WHEN formatType = 'DATA' THEN 1 END) AS downloads"),
+            F.expr("count(CASE WHEN formatType = 'METADATA' THEN 1 END) AS views"),
+            F.expr(f"{uniq.format(data_id)} AS unique_downloads"),
+            F.expr(f"{uniq.format(meta_id)} AS unique_views"),
         )
 
-        cites = self.citations_for_family(family)
-        key_len = CITATION_KEY_LEN[agg_type]
         cite_agg = (
-            cites.filter(F.col("link_publication_date").isNotNull())
+            self.citations_for_family(norms)
+            .filter("link_publication_date IS NOT NULL")
             .groupBy(
-                F.substring("link_publication_date", 1, key_len).alias("bucket")
+                F.expr(
+                    f"substring(link_publication_date, 1, {CITATION_KEY_LEN[agg_type]}) AS bucket"
+                )
             )
-            .agg(F.count(F.lit(1)).alias("citations"))
+            .agg(F.expr("count(1) AS citations"))
         )
 
-        merged = agg.join(cite_agg, "bucket", "full_outer")
-
-        spine = self._spine(meta, agg_type)
-        if spine is not None:
-            if by_country:
-                countries = agg.select("country").distinct()
-                spine = spine.crossJoin(F.broadcast(countries))
-                merged = spine.join(merged, ["bucket", "country"], "full_outer")
-            else:
-                merged = spine.join(merged, ["bucket"], "full_outer")
-
-        out_cols = ["bucket"] + (["country"] if by_country else [])
-        fills = ["downloads", "views", "unique_downloads", "unique_views", "citations"]
-        return merged.select(
-            *out_cols,
-            *[F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c) for c in fills],
-        ).orderBy(*out_cols)
-
-    def _spine(self, meta: dict, agg_type: str) -> DataFrame | None:
-        """Bucket spine over the requested range.  The reference builds
-        it with `range((end - start).days)` over day offsets and dedupes
-        the formatted keys (metricsreader.py:1029-1033) — the END DAY IS
-        EXCLUSIVE, so a range ending on the 1st of a month contributes
-        no bucket for that month/day.  We generate days in [start, end)
-        to match."""
-        if meta["start"] is None:
-            return None
-        fmt = AGG_FORMATS[agg_type]
-        start = meta["start"].strftime("%Y-%m-%d")
-        end = meta["end"].strftime("%Y-%m-%d")
-        return (
-            self.spark.range(1)
-            .select(
-                F.explode(
-                    F.sequence(
-                        F.lit(start).cast("date"),
-                        F.lit(end).cast("date"),
-                        F.expr("INTERVAL 1 DAY"),
-                    )
-                ).alias("d")
-            )
-            .filter(F.col("d") < F.lit(end).cast("date"))  # end-exclusive
-            .select(F.date_format("d", fmt).alias("bucket"))
-            .distinct()
+        # both aggregates, and so the result, are at most buckets x
+        # countries rows: from here on the plan runs in one partition,
+        # so the merge, the spine and the sort need no exchange (the
+        # last coalesce tells the planner that the join's output is one
+        # partition)
+        merged = (
+            agg.coalesce(1)
+            .join(cite_agg.coalesce(1), "bucket", "full_outer")
+            .coalesce(1)
         )
+        if meta["start"] is not None:
+            spine = spine_buckets(meta["start"], meta["end"], agg_type)
+            merged = _zero_fill(merged, spine, by_country)
+        return merged.selectExpr(
+            *keys, *[f"CAST(coalesce({c}, 0) AS BIGINT) AS {c}" for c in METRIC_COLS]
+        ).sortWithinPartitions(*keys)
 
     # -- catalog / search page summary -------------------------------------
     def catalog_summary_response(self, request: dict) -> dict:
@@ -330,8 +409,7 @@ class MetricsRequestPlanner:
         is IGNORED — the reference hardcodes 01/01/2012..today for this
         branch (metricsreader.py:616-618); datasets follow request
         order (catalogPIDs dict insertion order); citations are
-        gathered per family like gatherCitations.  One broadcast join +
-        one groupBy — per-seed families never leave the cluster."""
+        gathered per family like gatherCitations."""
         first = request.get("filterBy", [{}])[0]
         values = list(first.get("values", []))
         rows = {
@@ -358,52 +436,73 @@ class MetricsRequestPlanner:
         `catalog_summary_response` (getSummaryMetricsPerCatalog,
         metricsreader.py:470-640): per-seed family expansion, family
         UNIQUE event counts (the ES unique_doc_count cardinality), and
-        per-family citation gathering, all cluster-side; one row per
-        requested id regardless of activity."""
+        per-family citation gathering; one row per requested id
+        regardless of activity.
+
+        The family map is resolved on the driver (`_resolve_family_map`)
+        and enters the plan as one literal array of (seed, pids, norms).
+        Event rows, citation rows and one row per requested id then meet
+        in a single aggregation by seed."""
         first = request.get("filterBy", [{}])[0]
         values = list(first.get("values", []))
-        # r17 (guide §2.4): the family map feeds TWO broadcast builds
-        # (the event-count join and the citation substring join's
-        # normalized-pid side) — lazily localCheckpoint it so the
-        # identifiers match + explode + distinct run once, not twice
-        fam = self.family_map(
-            first.get("filterType", "catalog"), values
-        ).localCheckpoint(eager=False)
-        ev = self.counter_filtered_events()
-        counts = (
-            ev.join(F.broadcast(fam), "pid")
+        fams = self._resolve_family_map(first.get("filterType", "catalog"), values)
+        fam = (
+            "cast(array("
+            + ", ".join(
+                f"named_struct('seed', {_sql_string(s)}, 'pids', {_sql_array(p)},"
+                f" 'norms', {_sql_array(n)})"
+                for s, (p, n) in fams.items()
+            )
+            + ") as array<struct<seed: string, pids: array<string>, norms: array<string>>>)"
+        )
+        all_pids = sorted({p for pids, _ in fams.values() for p in pids})
+        no_id = "CAST(NULL AS STRING)"
+        no_cite = "CAST(NULL AS STRUCT<target_id: STRING, source_id: STRING>) AS __cite"
+        events = self.counter_filtered_events().filter(_sql_in("pid", all_pids)).selectExpr(
+            "pid",
+            f"{no_id} AS target_id",
+            "CASE WHEN formatType = 'DATA' THEN eventId END AS __dl",
+            "CASE WHEN formatType = 'METADATA' THEN eventId END AS __vw",
+            no_cite,
+        )
+        cites = self.t.citations.selectExpr(
+            f"{no_id} AS pid",
+            "target_id",
+            f"{no_id} AS __dl",
+            f"{no_id} AS __vw",
+            "struct(target_id, source_id) AS __cite",
+        )
+        # an event row (NULL target_id) belongs to the seeds whose family
+        # holds its pid, a citation row (NULL pid) to the seeds whose
+        # family it cites
+        belongs = f"array_contains(f.pids, pid) OR {_cites_any('f.norms')}"
+        matched = events.unionByName(cites).selectExpr(
+            f"explode(transform(filter({fam}, f -> {belongs}), f -> f.seed)) AS seed",
+            "__dl",
+            "__vw",
+            "__cite",
+            "CAST(NULL AS INT) AS __req",
+        )
+        requested = self.spark.range(1).selectExpr(
+            f"explode({_sql_array(values)}) AS seed",
+            f"{no_id} AS __dl",
+            f"{no_id} AS __vw",
+            no_cite,
+            "1 AS __req",
+        )
+        return (
+            matched.unionByName(requested)
             .groupBy("seed")
             .agg(
-                F.countDistinct(
-                    F.when(F.col("formatType") == "DATA", F.col("eventId"))
-                ).alias("__dl"),
-                F.countDistinct(
-                    F.when(F.col("formatType") == "METADATA", F.col("eventId"))
-                ).alias("__vw"),
+                F.expr("count(DISTINCT __dl) AS downloads"),
+                F.expr("count(DISTINCT __vw) AS views"),
+                F.expr("count(DISTINCT __cite) AS citations"),
+                F.expr("count(__req) AS __n"),
             )
-        )
-        pids = fam.select(
-            "seed",
-            F.lower(F.substring_index(F.col("pid"), "?", 1)).alias("__pid_norm"),
-        ).distinct()
-        cites = (
-            self.t.citations.join(
-                F.broadcast(pids),
-                F.instr(F.col("__pid_norm"), F.lower(F.col("target_id"))) > 0,
-            )
-            .dropDuplicates(["seed", "target_id", "source_id"])
-            .groupBy("seed")
-            .agg(F.count(F.lit(1)).alias("__ct"))
-        )
-        seeds = self.spark.createDataFrame([(v,) for v in values], "seed string")
-        return (
-            seeds.join(counts, "seed", "left")
-            .join(cites, "seed", "left")
-            .select(
-                "seed",
-                F.coalesce("__dl", F.lit(0)).cast("long").alias("downloads"),
-                F.coalesce("__vw", F.lit(0)).cast("long").alias("views"),
-                F.coalesce("__ct", F.lit(0)).cast("long").alias("citations"),
+            # one row per requested id, repeats included
+            .selectExpr(
+                "explode(array_repeat(seed, CAST(__n AS INT))) AS seed",
+                *[f"CAST({c} AS BIGINT) AS {c}" for c in ("downloads", "views", "citations")],
             )
         )
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from metrics_service_spark.plans.metrics_request import MetricsRequestPlanner
+from metrics_service_spark.plans.metrics_request import MetricsRequestPlanner, MetricsTables
 from metrics_service_spark.testing.fixtures import make_tables
 
 
@@ -301,3 +301,274 @@ def test_oracle_mx_guard_fires_loudly():
     assert "SELECT 10000 AS mx" in breached
     with pytest.raises(Exception, match="series guard"):
         con.execute(breached).fetchall()
+
+
+# --- the driver-resolved family ----------------------------------------------
+# A request collects its identifier family once and filters with the
+# literal list.  The expected rows below are those of the earlier
+# broadcast-join planner on the same inputs.
+
+
+def test_unmatched_id_gives_all_zero_spine(planner):
+    # an empty family filters out every event and citation: the month
+    # spine remains, all zeros, and nothing raises
+    req = request("dataset", ["doi:10.5063/NONE"])
+    assert _rows(planner.plan(req)) == [
+        ("2018-01", 0, 0, 0, 0, 0),
+        ("2018-02", 0, 0, 0, 0, 0),
+    ]
+    assert planner.response(req)["resultDetails"] == {
+        "totalDownloads": 0,
+        "totalViews": 0,
+        "totalCitations": 0,
+    }
+    # a value cannot break out of its literal in the pid list, and a
+    # value that is not a string is refused
+    assert _rows(planner.plan(request("dataset", ["x' OR true OR 'y"]))) == _rows(
+        planner.plan(req)
+    )
+    with pytest.raises(TypeError, match="must be strings"):
+        planner.plan(request("dataset", [7]))
+    # grouped by country there are no observed countries to spread the
+    # spine over, so the result is empty
+    by_country = request("dataset", ["doi:10.5063/NONE"], end="01/04/2018", group_by=["day", "country"])
+    assert _rows(planner.plan(by_country)) == []
+
+
+def test_user_with_only_private_datasets(planner):
+    # bob's one dataset is not public: the family is empty, and so are
+    # both the event and the citation side
+    assert _rows(planner.plan(request("user", ["uid=bob"]))) == [
+        ("2018-01", 0, 0, 0, 0, 0),
+        ("2018-02", 0, 0, 0, 0, 0),
+    ]
+
+
+def _null_member_planner(spark):
+    from metrics_service_spark.schemas import EVENT_SCHEMA, IDENTIFIER_SCHEMA
+    from metrics_service_spark.testing.fixtures import A1, A2, AMAP, _ev
+
+    t = make_tables(spark)
+    ids = spark.createDataFrame(
+        [(A1, "urn:sid:A", [A1], True, "METADATA", ["uid=alice"], [A1, None, A2, AMAP])],
+        IDENTIFIER_SCHEMA,
+    )
+    # an event with a NULL pid, which the NULL family member must not match
+    ev = t.events.union(spark.createDataFrame([_ev("e_null", None, 20)], EVENT_SCHEMA))
+    return MetricsRequestPlanner(spark, MetricsTables(ev, ids, t.citations))
+
+
+def test_null_family_member_matches_nothing(spark, planner):
+    from metrics_service_spark.testing.fixtures import A1
+
+    p = _null_member_planner(spark)
+    # family_pids still returns the NULL row ...
+    assert None in [r.pid for r in p.family_pids("dataset", [A1]).collect()]
+    # ... but neither the NULL-pid event nor any citation matches it:
+    # the rows equal those of the family without the NULL
+    assert _rows(p.plan(request("dataset", [A1]))) == _rows(
+        planner.plan(request("dataset", [A1]))
+    ) == [
+        ("2017-12", 0, 0, 0, 0, 1),
+        ("2018-01", 2, 3, 2, 2, 0),
+        ("2018-02", 2, 0, 2, 0, 1),
+    ]
+    assert _rows(p.plan(request("user", ["uid=alice"], group_by=["month", "country"]))) == [
+        ("2017-12", None, 0, 0, 0, 0, 1),
+        ("2018-01", "DE", 0, 0, 0, 0, 0),
+        ("2018-01", "US", 2, 3, 2, 2, 0),
+        ("2018-02", "DE", 1, 0, 1, 0, 1),
+        ("2018-02", "US", 1, 0, 1, 0, 1),
+    ]
+    summary = {
+        r.seed: tuple(r)[1:]
+        for r in p.catalog_summary_frame(
+            {"filterBy": [{"filterType": "catalog", "values": [A1, "x"]}]}
+        ).collect()
+    }
+    assert summary == {A1: (4, 2, 3), "x": (0, 0, 0)}
+
+
+MIXED = "doi:10.5063/MiXeD?ver=2"
+UNICODE = "doi:10.5063/Ünï"
+QUOTED = "doi:10.5063/O'Neil\\x"
+
+
+@pytest.fixture(scope="module")
+def mixed_planner(spark):
+    """One public dataset whose family holds a mixed-case pid with a
+    Dryad '?suffix', a non-ASCII pid, and a pid with a quote and a
+    backslash (which the literal list must escape)."""
+    from metrics_service_spark.schemas import (
+        CITATION_SCHEMA,
+        EVENT_SCHEMA,
+        IDENTIFIER_SCHEMA,
+    )
+    from metrics_service_spark.testing.fixtures import _ev
+
+    ids = spark.createDataFrame(
+        [(MIXED, None, [MIXED], True, "DATA", ["uid=carol"], [MIXED, UNICODE, QUOTED])],
+        IDENTIFIER_SCHEMA,
+    )
+    events = spark.createDataFrame(
+        [_ev("m1", MIXED, 3), _ev("m2", UNICODE, 4, fmt="METADATA"), _ev("m3", QUOTED, 5)],
+        EVENT_SCHEMA,
+    )
+
+    def cite(target, source, date):
+        return (target, source, None, date, None, None, None, None, None, "cites")
+
+    cites = spark.createDataFrame(
+        [
+            cite("10.5063/mixed", "s1", "2018-01-05"),  # suffix stripped
+            cite("10.5063/MIXED", "s2", "2018-01-06"),  # both sides lowercased
+            cite("10.5063/mixed?ver=2", "s3", "2018-01-07"),  # no: the pid loses its suffix
+            cite("10.5063/ÜNÏ", "s4", "2018-02-01"),  # Unicode lowercasing
+            cite("10.5063/ünï", "s5", "2018-02-02"),
+            cite("MiXeD", "s6", "2018-02-03"),  # any substring
+            cite("10.5063/other", "s7", "2018-02-04"),  # no
+            cite("10.5063/o'neil\\x", "s8", "2018-02-05"),
+            cite("O'NEIL", "s9", "2018-02-06"),
+            cite("neil\\\\x", "s10", "2018-02-07"),  # no: two backslashes
+        ],
+        CITATION_SCHEMA,
+    )
+    return MetricsRequestPlanner(spark, MetricsTables(events, ids, cites))
+
+
+def test_mixed_case_suffixed_pid_against_citations(mixed_planner):
+    expected = [("2018-01", 2, 1, 2, 1, 2), ("2018-02", 0, 0, 0, 0, 5)]
+    assert _rows(mixed_planner.plan(request("dataset", [MIXED]))) == expected
+    assert _rows(mixed_planner.plan(request("user", ["uid=carol"]))) == expected
+    # per seed, on the catalog-summary path; a repeated id keeps its row
+    values = [MIXED, UNICODE, QUOTED, "doi:10.5063/none", MIXED]
+    rows = mixed_planner.catalog_summary_frame(
+        {"filterBy": [{"filterType": "catalog", "values": values}]}
+    ).collect()
+    assert sorted(map(tuple, rows)) == [
+        (MIXED, 2, 1, 7),
+        (MIXED, 2, 1, 7),
+        (QUOTED, 2, 1, 7),
+        ("doi:10.5063/none", 0, 0, 0),
+        (UNICODE, 2, 1, 7),
+    ]
+
+
+# --- the date spine -------------------------------------------------------------
+SPINE_CASES = [
+    # the end is exclusive: a range ending on the 1st has no bucket for it
+    ("2024-01-01", "2024-03-01", "month", ["2024-01", "2024-02"]),
+    ("2024-01-29", "2024-02-01", "day", ["2024-01-29", "2024-01-30", "2024-01-31"]),
+    ("2024-01-15", "2024-01-15", "day", []),
+    ("2024-01-15", "2024-01-15", "month", []),
+    ("2023-11-20", "2024-02-10", "month", ["2023-11", "2023-12", "2024-01", "2024-02"]),
+    ("2023-06-01", "2025-01-01", "year", ["2023", "2024"]),
+    ("2023-06-01", "2025-01-02", "year", ["2023", "2024", "2025"]),
+]
+
+
+@pytest.mark.parametrize("start,end,agg_type,expected", SPINE_CASES)
+def test_spine_matches_sequence_distinct(spark, start, end, agg_type, expected):
+    """The array-expression spine gives, in order, the bucket set of a
+    `sequence -> explode -> filter(< end) -> date_format -> distinct`
+    spine."""
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    from metrics_service_spark.plans.metrics_request import AGG_FORMATS, spine_buckets
+
+    first, last = (F.lit(d).cast("date") for d in (start, end))
+    old = (
+        spark.range(1)
+        .select(F.explode(F.sequence(first, last, F.expr("INTERVAL 1 DAY"))).alias("d"))
+        .filter(F.col("d") < last)
+        .select(F.date_format("d", AGG_FORMATS[agg_type]).alias("bucket"))
+        .distinct()
+    )
+    new = spine_buckets(datetime.fromisoformat(start), datetime.fromisoformat(end), agg_type)
+    got = spark.range(1).selectExpr(f"{new} AS b").first().b
+    assert got == sorted(r.bucket for r in old.collect()) == expected
+
+
+def test_spine_in_requests(planner):
+    from metrics_service_spark.testing.fixtures import A1
+
+    # start == end: no spine, and the range holds no event; the family's
+    # citations outside it still surface
+    same_day = [("2017-12", 0, 0, 0, 0, 1), ("2018-02", 0, 0, 0, 0, 1)]
+    assert _rows(planner.plan(request("dataset", [A1], start="01/15/2018", end="01/15/2018"))) == same_day
+    # a month range across the year end
+    assert _rows(planner.plan(request("dataset", [A1], start="11/20/2017", end="02/10/2018"))) == [
+        ("2017-11", 0, 0, 0, 0, 0),
+        ("2017-12", 0, 0, 0, 0, 1),
+        ("2018-01", 2, 3, 2, 2, 0),
+        ("2018-02", 0, 0, 0, 0, 1),
+    ]
+    # year buckets; the range ends before any event (lte midnight of
+    # the 2nd), and 2018 is a spine year through its first day
+    assert _rows(
+        planner.plan(request("dataset", [A1], start="06/01/2016", end="01/02/2018", group_by=["year"]))
+    ) == [("2016", 0, 0, 0, 0, 0), ("2017", 0, 0, 0, 0, 1), ("2018", 0, 0, 0, 0, 1)]
+    # day x country: the spine spreads over the observed countries,
+    # citation-only days keep their NULL country
+    assert _rows(
+        planner.plan(
+            request("repository", ["urn:node:KNB"], start="12/30/2017", end="01/04/2018", group_by=["day", "country"])
+        )
+    ) == [
+        ("2017-12-01", None, 0, 0, 0, 0, 1),
+        ("2017-12-30", "US", 0, 0, 0, 0, 0),
+        ("2017-12-31", "US", 0, 0, 0, 0, 0),
+        ("2018-01-01", "US", 0, 0, 0, 0, 0),
+        ("2018-01-02", "US", 1, 0, 1, 0, 0),
+        ("2018-01-03", "US", 1, 0, 1, 0, 0),
+        ("2018-01-20", None, 0, 0, 0, 0, 1),
+        ("2018-02-15", None, 0, 0, 0, 0, 1),
+    ]
+
+
+# --- Spark jobs per request ---------------------------------------------------
+# Under AQE every exchange is a job: the family job, two for the
+# distinct aggregation, two for the citation dedupe and count, and the
+# result stage.  A scope without a family (repository, portal) skips
+# the family job and the dedupe; a catalog/package request with several
+# ids takes the per-dataset summary branch (the family job, the two
+# exchanges of its one aggregation, the result stage).
+REQUEST_JOBS = {
+    "metrics_request_landing": ("LANDING_REQUEST", 6),
+    "metrics_request_daily_country": ("DAILY_COUNTRY_REQUEST", 6),
+    "metrics_request_user": ("USER_REQUEST", 6),
+    "metrics_request_group": ("GROUP_REQUEST", 6),
+    "metrics_request_repository": ("REPOSITORY_REQUEST", 4),
+    "metrics_request_portal": ("PORTAL_REQUEST", 4),
+    "metrics_request_package": ("PACKAGE_REQUEST", 4),
+    "metrics_request_catalog_summary": ("CATALOG_SUMMARY_REQUEST", 4),
+}
+
+
+@pytest.fixture(scope="module")
+def catalog_planner(spark, sf_dir):
+    from metrics_service_spark.catalog.request import _tables
+
+    return MetricsRequestPlanner(spark, _tables(spark, sf_dir))
+
+
+@pytest.mark.parametrize("entry", sorted(REQUEST_JOBS))
+def test_request_job_count_pinned(spark, catalog_planner, entry):
+    """One `response()` of each catalog request launches exactly its
+    pinned number of Spark jobs, counted by job id under the request's
+    own job group (not by the length of Spark's retained job list)."""
+    from metrics_service_spark.catalog import request as catalog
+
+    name, pinned = REQUEST_JOBS[entry]
+    sc = spark.sparkContext
+    group = f"job-count-{entry}"
+    sc.setJobGroup(group, entry)
+    try:
+        catalog_planner.response(getattr(catalog, name))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(set(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs == pinned, f"{entry}: {jobs} Spark jobs, pinned at {pinned}"

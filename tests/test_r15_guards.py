@@ -78,9 +78,12 @@ def test_bpe_local_finish_job_count_independent_of_merges(spark):
     tracker = spark.sparkContext.statusTracker()
 
     def jobs_for(n: int) -> int:
-        before = len(tracker.getJobIdsForGroup(None))
+        # count job ids above a mark: the length of Spark's retained job
+        # list stops growing once the session passes spark.ui.retainedJobs
+        ids = tracker.getJobIdsForGroup(None)
+        mark = max(ids) if ids else -1
         bpe_train_local_finish(docs, "text", n_merges=n)
-        return len(tracker.getJobIdsForGroup(None)) - before
+        return sum(1 for j in tracker.getJobIdsForGroup(None) if j > mark)
 
     assert jobs_for(2) == jobs_for(6)
 

@@ -86,3 +86,23 @@ def test_minhash_md5_rejects_n_with_pretokenized_shingles(spark):
     sh = shingle_frame(df, "doc_id", "text", n=3)
     with pytest.raises(ValueError, match="ignored when `shingles`"):
         minhash_signatures_md5(df, "doc_id", "text", n=4, shingles=sh)
+
+
+def test_minhash_md5_rejects_any_explicit_n_with_shingles(spark):
+    # `n` defaults to None: even the default value 3, passed
+    # explicitly with `shingles`, is rejected; leaving n out is the one
+    # accepted form, and it matches the inline path at its default n=3
+    from metrics_service_spark.operators.dedup import (
+        minhash_signatures_md5,
+        shingle_frame,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (2, "b c d e")], "doc_id long, text string"
+    )
+    sh = shingle_frame(df, "doc_id", "text", n=3)
+    with pytest.raises(ValueError, match="ignored when `shingles`"):
+        minhash_signatures_md5(df, "doc_id", "text", n=3, shingles=sh)
+    shared = minhash_signatures_md5(df, "doc_id", "text", num_hashes=4, shingles=sh)
+    inline = minhash_signatures_md5(df, "doc_id", "text", num_hashes=4)
+    assert sorted(map(tuple, shared.collect())) == sorted(map(tuple, inline.collect()))
